@@ -40,14 +40,6 @@ _HASHES = {"SHA1": hashlib.sha1, "SHA-1": hashlib.sha1,
            "SHA512": hashlib.sha512, "SHA-512": hashlib.sha512}
 
 
-def is_encrypted_ooxml(data: bytes) -> bool:
-    try:
-        streams = set(Ole2File(data).list_streams())
-    except Exception:
-        return False
-    return "EncryptionInfo" in streams and "EncryptedPackage" in streams
-
-
 def _pad36(b: bytes, n: int) -> bytes:
     return b[:n] if len(b) >= n else b + b"\x36" * (n - len(b))
 

@@ -179,12 +179,6 @@ def minhash_signature_from_halves(halves: Column,
         for i in range(k)])
 
 
-def minhash_signature(sh: Column, k: int = DEFAULT_NUM_HASHES) -> Column:
-    """One-shot composition for single-use contexts. Inside pipelines,
-    persist minhash_halves first (see its docstring)."""
-    return minhash_signature_from_halves(minhash_halves(sh), k)
-
-
 def minhash_halves_sql(sh_expr: str) -> str:
     """DuckDB twin of the per-shingle (h1, h2) md5 halves."""
     return (f"list_transform(list_transform({sh_expr}, s -> md5(s)), "
@@ -596,60 +590,22 @@ def duplicate_clusters(
     cluster_id = min id reachable through minhash_lsh_pairs edges
     (docs with no near-dups are their own singleton cluster).
 
-    Iterative min-label propagation — converges in O(cluster diameter)
-    rounds (near-dup clusters are shallow). Each round is one keyed
-    join + partial-agg min; labels are localCheckpoint'ed so the plan
-    doesn't grow with iterations. The fixpoint test is the label sum
-    (strictly decreasing until stable — one cheap aggregate per round,
-    no full compare). The loop ALWAYS runs to the fixpoint; max_iter is
-    a safety valve only, and exhausting it warns loudly because a
-    non-converged result diverges from the connected-components
-    contract (and from the recursive-CTE DuckDB twin).
+    The LSH pairs feed components_from_pairs, the package's one
+    min-label kernel; cluster_id is then cast to long. Near-dup
+    clusters are shallow, so the kernel converges in a few rounds.
+    Failure policy is _fixpoint's, shared by all five fixpoint
+    operators: max_iter < 1 raises ValueError and no fixpoint within
+    max_iter rounds raises RuntimeError.
 
     DuckDB twin: duplicate_clusters_sql (recursive CTE reachability) —
     the fixpoint of min-label propagation IS min reachable id, so both
     engines agree exactly.
     """
-    import warnings
-
     pairs = minhash_lsh_pairs(df, id_col, text_col, threshold=threshold,
-                              base=base).select("id1", "id2")
-    edges = pairs.unionAll(
-        pairs.select(F.col("id2").alias("id1"), F.col("id1").alias("id2")))
-    # eager=False on every checkpoint here: each is immediately
-    # followed by an action that computes every partition (the label
-    # sum, or round 1's join for the edges), so one job materializes
-    # the checkpoint AND reads the scalar — halving the per-round job
-    # count. Value-neutral: localCheckpoint only truncates lineage.
-    edges = edges.localCheckpoint(eager=False)
-    labels = df.select(F.col(id_col).alias("id"),
-                       F.col(id_col).cast("long").alias("label"))
-    labels = labels.localCheckpoint(eager=False)
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    converged = False
-    for _ in range(max_iter):
-        nbr = (edges.join(labels, edges["id2"] == labels["id"])
-               .groupBy("id1").agg(F.min("label").alias("nbr")))
-        labels = (labels.join(nbr, labels["id"] == nbr["id1"], "left")
-                  .select(labels["id"],
-                          F.least(F.col("label"),
-                                  F.coalesce(F.col("nbr"), F.col("label")))
-                          .alias("label"))
-                  .localCheckpoint(eager=False))
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            converged = True
-            break  # fixpoint: labels can only decrease
-        prev_sum = cur_sum
-    if not converged:
-        warnings.warn(
-            f"duplicate_clusters: no fixpoint after max_iter={max_iter} "
-            "rounds — a duplicate chain has graph diameter beyond the "
-            "safety valve and cluster ids are NOT fully converged; raise "
-            "max_iter for this corpus",
-            RuntimeWarning, stacklevel=2)
-    return labels.select(F.col("id").alias(id_col),
-                         F.col("label").alias("cluster_id"))
+                              base=base)
+    return (components_from_pairs(df.select(id_col), pairs, id_col,
+                                  max_iter=max_iter)
+            .withColumn("cluster_id", F.col("cluster_id").cast("long")))
 
 
 def duplicate_clusters_sql(
@@ -1077,55 +1033,83 @@ def dedup_exact_incremental_pruned(
     return new_df.join(keep, id_col, "left_semi")
 
 
+def _fixpoint(op: str, state: DataFrame, step, unchanged,
+              max_iter: int) -> "tuple[DataFrame, int]":
+    """The one iteration loop behind the fixpoint operators
+    (components_from_pairs and, through it, duplicate_clusters and
+    graph.connected_components; graph.connected_components_large and
+    graph.core_numbers with their own steps).
+
+    Each round computes `step(state)` and checkpoints it with
+    localCheckpoint(eager=False), so the plan stays one round deep and
+    nothing runs yet. `unchanged(prev, state)` then makes the round's
+    one scalar read; it must scan every partition of the new state, so
+    that same read also materializes the checkpoint. The seed state is
+    checkpointed the same way.
+
+    Failure policy, the same for every caller: max_iter < 1 raises
+    ValueError, and no fixpoint within max_iter rounds raises
+    RuntimeError naming `op` — an unconverged result is never
+    returned. Returns (fixpoint state, rounds run); the last round is
+    the one that found nothing changed."""
+    if max_iter < 1:
+        raise ValueError(f"{op}: max_iter must be >= 1")
+    state = state.localCheckpoint(eager=False)
+    for rounds in range(1, max_iter + 1):
+        prev, state = state, step(state).localCheckpoint(eager=False)
+        if unchanged(prev, state):
+            return state, rounds
+    raise RuntimeError(
+        f"{op}: no fixpoint after max_iter={max_iter} rounds; raise "
+        "max_iter for this input")
+
+
 def components_from_pairs(
     ids: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 50,
 ) -> DataFrame:
-    """Connected components over an ARBITRARY pair table (id1, id2) —
-    the duplicate_clusters label-propagation loop generalized to any
-    edge source (pHash pairs, simhash pairs, embedding pairs) and any
-    orderable id type: cluster_id = min id reachable (strings use
-    lexicographic min). Same shape: per round one keyed join +
-    partial-agg min, localCheckpoint so the plan stays one round
-    deep; fixpoint = zero labels changed (a 1-row aggregate per
-    round, type-agnostic where the numeric label-sum trick is not)."""
-    import warnings
+    """Connected components over an ARBITRARY pair table (id1, id2):
+    (id_col, cluster_id = min id reachable). The package's one
+    min-label kernel, fed by any edge source (LSH, pHash and
+    fuzzy-match pairs, graph edges). Ids keep their
+    input type, so integer ids take the numeric min and strings the
+    lexicographic min.
 
+    Per round: one keyed join + partial-agg min over the symmetrized
+    edges; the round's state carries the previous label as a column,
+    and the fixpoint test counts changed labels on it: one scalar read
+    per round, which also materializes the round's checkpoint. Rounds
+    grow with cluster diameter; graph.connected_components_large
+    covers unbounded diameter. Failure policy is _fixpoint's:
+    max_iter < 1 raises ValueError, and no fixpoint within max_iter
+    rounds raises RuntimeError."""
     edges = pairs.select("id1", "id2").unionAll(
         pairs.select(F.col("id2").alias("id1"),
                      F.col("id1").alias("id2")))
-    # eager=False: round 1's join/count computes every partition of
-    # both checkpoints — fuse materialization into it (see
-    # duplicate_clusters)
+    # lazy like _fixpoint's own checkpoints: round 1's read
+    # materializes it
     edges = edges.localCheckpoint(eager=False)
-    labels = ids.select(F.col(id_col).alias("id"),
-                        F.col(id_col).alias("label"))
-    labels = labels.localCheckpoint(eager=False)
-    converged = False
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr = (edges.join(labels, edges["id2"] == labels["id"])
                .groupBy("id1").agg(F.min("label").alias("nbr")))
-        stepped = (labels.join(nbr, labels["id"] == nbr["id1"], "left")
-                   .select(labels["id"],
-                           F.col("label").alias("__old"),
-                           F.least(F.col("label"),
-                                   F.coalesce(F.col("nbr"),
-                                              F.col("label")))
-                           .alias("label"))
-                   .localCheckpoint(eager=False))
-        changed = (stepped.filter(F.col("label") != F.col("__old"))
-                   .count())
-        labels = stepped.drop("__old")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"components_from_pairs: no fixpoint after max_iter="
-            f"{max_iter} rounds — raise max_iter for this edge set",
-            RuntimeWarning, stacklevel=2)
+        return (labels.join(nbr, labels["id"] == nbr["id1"], "left")
+                .select(labels["id"],
+                        F.col("label").alias("__old"),
+                        F.least(F.col("label"),
+                                F.coalesce(F.col("nbr"), F.col("label")))
+                        .alias("label")))
+
+    def unchanged(_, labels: DataFrame) -> bool:
+        return (labels.filter(F.col("label") != F.col("__old"))
+                .count() == 0)
+
+    labels, _ = _fixpoint(
+        "components_from_pairs",
+        ids.select(F.col(id_col).alias("id"), F.col(id_col).alias("label")),
+        step, unchanged, max_iter)
     return labels.select(F.col("id").alias(id_col),
                          F.col("label").alias("cluster_id"))
 

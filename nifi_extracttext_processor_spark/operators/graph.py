@@ -601,11 +601,16 @@ def core_numbers(
     rank neighbor values + one agg — shuffles carry (node, int)
     pairs. The h-index of a node needs only its TOP-c(v) neighbor
     values, so rows rank desc and cap at min(rn, value); a 10^7-degree
-    hub pays one keyed sort of ints, not a collect. Fixpoint check is
-    a 1-row changed-count per round (the components posture).
+    hub pays one keyed sort of ints, not a collect. The round's state
+    carries the previous value, and the fixpoint test counts changed
+    values on it; the loop, checkpoints and failure policy are
+    dedup._fixpoint's (max_iter < 1 raises ValueError, no fixpoint
+    within max_iter rounds raises RuntimeError).
     Undirected simple graph: edges normalize (least/greatest,
     distinct, self-loops dropped)."""
     from pyspark.sql import Window
+
+    from .dedup import _fixpoint
 
     und = (edges.select(
         F.least(F.col(src_col), F.col(dst_col)).alias("a"),
@@ -616,12 +621,11 @@ def core_numbers(
                       F.col("b").alias("nbr"))
            .unionAll(und.select(F.col("b").alias("node"),
                                 F.col("a").alias("nbr"))))
-    adj = adj.localCheckpoint(eager=True)
-    vals = (adj.groupBy("node").agg(F.count("*").alias("c"))
-            .localCheckpoint(eager=True))
+    adj = adj.localCheckpoint(eager=False)
     w = Window.partitionBy("node").orderBy(F.desc("nv"),
                                            F.asc("nbr"))
-    for _ in range(max_iter):
+
+    def step(vals: DataFrame) -> DataFrame:
         nbrv = (adj.join(vals.select(F.col("node").alias("nbr"),
                                      F.col("c").alias("nv")), "nbr"))
         hidx = (nbrv
@@ -629,25 +633,19 @@ def core_numbers(
                 .groupBy("node")
                 .agg(F.max(F.least(F.col("rn"), F.col("nv")))
                      .alias("h")))
-        stepped = (vals.join(hidx, "node", "left")
-                   .select("node",
-                           F.col("c").alias("__old"),
-                           F.least(F.col("c"),
-                                   F.coalesce(F.col("h"), F.lit(0)))
-                           .alias("c"))
-                   # eager=False: the changed-count below computes
-                   # every partition, so one job materializes + reads
-                   .localCheckpoint(eager=False))
-        changed = (stepped.filter(F.col("c") != F.col("__old"))
-                   .count())
-        vals = stepped.drop("__old")
-        if changed == 0:
-            break
-    else:
-        import warnings
-        warnings.warn(
-            f"core_numbers: no fixpoint after max_iter={max_iter}",
-            RuntimeWarning, stacklevel=2)
+        return (vals.join(hidx, "node", "left")
+                .select("node",
+                        F.col("c").alias("__old"),
+                        F.least(F.col("c"),
+                                F.coalesce(F.col("h"), F.lit(0)))
+                        .alias("c")))
+
+    def unchanged(_, vals: DataFrame) -> bool:
+        return vals.filter(F.col("c") != F.col("__old")).count() == 0
+
+    vals, _ = _fixpoint(
+        "core_numbers", adj.groupBy("node").agg(F.count("*").alias("c")),
+        step, unchanged, max_iter)
     return vals.select("node", F.col("c").alias("coreness"))
 
 
@@ -703,63 +701,33 @@ def connected_components(
     each round a node takes the minimum of its own and its
     neighbors' labels; at the fixpoint every node carries its
     component's minimum node id (the canonical representative both
-    engines agree on — string ids compare binary-lexicographic in
-    Spark and DuckDB alike).
+    engines agree on — ids are cast to string and compare
+    binary-lexicographic in Spark and DuckDB alike).
 
-    Convergence is O(component diameter) rounds — small for the
-    social/web/dedup graphs this targets; each round is one keyed
-    join + map-side min agg over the symmetrized edge list, with
-    `localCheckpoint(eager=True)` truncating lineage (the pagerank
-    posture) and ONE scalar changed-count read per round. Raises
-    RuntimeError if `max_iter` rounds don't converge (fail loud —
-    a silent partial labeling corrupts downstream grouping; raise
-    max_iter for pathological chain graphs, or pre-contract with the
-    large-star/small-star rounds of Kiveris 2014 "Connected
-    components in MapReduce and beyond" if diameter is unbounded).
+    The string-cast edges feed dedup.components_from_pairs, the
+    package's one min-label kernel. Convergence is O(component
+    diameter) rounds — small for the social/web/dedup graphs this
+    targets; connected_components_large covers unbounded diameter.
+    Failure policy is dedup._fixpoint's: max_iter < 1 raises
+    ValueError, and no fixpoint within max_iter rounds raises
+    RuntimeError (a silent partial labeling would corrupt downstream
+    grouping).
 
     Isolated nodes cannot appear in an edge list and are absent by
     construction; self-loops and parallel/reversed duplicates are
-    harmless (symmetrize + distinct collapses them)."""
-    if max_iter < 1:
-        raise ValueError("max_iter must be >= 1")
-    e = (edges.select(F.col(src_col).cast("string").alias("s"),
-                      F.col(dst_col).cast("string").alias("d"))
-         .filter(F.col("s").isNotNull() & F.col("d").isNotNull())
-         .distinct())
-    und = (e.union(e.select(F.col("d").alias("s"),
-                            F.col("s").alias("d")))
-           .distinct().persist())
-    labels = (und.select(F.col("s").alias("node")).distinct()
-              .withColumn("label", F.col("node"))
-              .localCheckpoint(eager=True))
-    try:
-        for _ in range(max_iter):
-            nbr = (und.join(labels, und["d"] == labels["node"])
-                   .groupBy(und["s"].alias("node"))
-                   .agg(F.min("label").alias("nl")))
-            new_labels = (labels.join(nbr, "node", "left")
-                          .select("node",
-                                  F.least(F.col("label"),
-                                          F.coalesce(F.col("nl"),
-                                                     F.col("label")))
-                                  .alias("label"))
-                          # eager=False: the changed-count join below
-                          # computes every partition — one job
-                          # materializes + reads (2/round -> 1)
-                          .localCheckpoint(eager=False))
-            changed = (new_labels.alias("n")
-                       .join(labels.alias("o"), "node")
-                       .filter(F.col("n.label") != F.col("o.label"))
-                       .count())
-            labels = new_labels
-            if changed == 0:
-                return labels.select(
-                    "node", F.col("label").alias("component"))
-        raise RuntimeError(
-            f"connected_components: no fixpoint after {max_iter} "
-            "rounds — raise max_iter (component diameter exceeds it)")
-    finally:
-        und.unpersist()
+    harmless."""
+    from .dedup import components_from_pairs
+
+    # lazy checkpoint: the node list and the kernel's edges both read
+    # it, so the edge source is computed once
+    e = (edges.select(F.col(src_col).cast("string").alias("id1"),
+                      F.col(dst_col).cast("string").alias("id2"))
+         .filter(F.col("id1").isNotNull() & F.col("id2").isNotNull())
+         .distinct().localCheckpoint(eager=False))
+    nodes = (e.select(F.col("id1").alias("node"))
+             .union(e.select(F.col("id2").alias("node"))).distinct())
+    return (components_from_pairs(nodes, e, "node", max_iter=max_iter)
+            .withColumnRenamed("cluster_id", "component"))
 
 
 def connected_components_sql(
@@ -976,38 +944,30 @@ def connected_components_large(
     small-star re-points the smaller neighbors (same shape on the
     max-oriented list) — 2 aggs + 2 joins per round, shuffles carry
     (node, node) string pairs only. Convergence = the edge set is
-    unchanged: ONE count+checksum agg per round (two scalar reads,
-    no edge-diff join); lineage truncates per round via
-    localCheckpoint (the pagerank/components posture). Fail-loud
-    RuntimeError if max_iter rounds don't converge.
+    unchanged: one scalar read per round compares the (count,
+    checksum) of the previous and the new edge set (no edge-diff
+    join). The loop, checkpoints and failure policy are
+    dedup._fixpoint's (max_iter < 1 raises ValueError, no fixpoint
+    within max_iter rounds raises RuntimeError).
 
     At the fixpoint every surviving edge is (node, component-min),
     so labels read off directly; the component min itself and any
     node whose edges were all absorbed re-enter via the original
     node list with label = min over their final star edges."""
-    if max_iter < 1:
-        raise ValueError("max_iter must be >= 1")
+    from .dedup import _fixpoint
+
     base = (edges.select(F.col(src_col).cast("string").alias("a"),
                          F.col(dst_col).cast("string").alias("b"))
             .filter(F.col("a").isNotNull() & F.col("b").isNotNull()))
     nodes = (base.select(F.col("a").alias("node"))
              .union(base.select(F.col("b").alias("node")))
-             .distinct().localCheckpoint(eager=True))
-    cur = (base.filter(F.col("a") != F.col("b"))
-           .select(F.least("a", "b").alias("a"),
-                   F.greatest("a", "b").alias("b"))
-           .distinct().localCheckpoint(eager=True))
+             .distinct().localCheckpoint(eager=False))
+    seed = (base.filter(F.col("a") != F.col("b"))
+            .select(F.least("a", "b").alias("a"),
+                    F.greatest("a", "b").alias("b"))
+            .distinct())
 
-    def _sig(e) -> tuple:
-        row = (e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.xxhash64(F.concat_ws("|", "a", "b"))
-                             .cast("decimal(38,0)")), F.lit(0))
-            .alias("h")).collect()[0])
-        return (row["n"], row["h"])
-
-    sig = _sig(cur)
-    for _ in range(max_iter):
+    def step(cur: DataFrame) -> DataFrame:
         # large-star: from each node u, re-hang every LARGER
         # neighbor v onto m = min(Γ(u) ∪ {u})
         sym = cur.select(F.col("a").alias("u"), F.col("b").alias("v")) \
@@ -1026,27 +986,29 @@ def connected_components_large(
         # smaller neighbors (and u itself) at the minimum
         smin = (ls.groupBy("b")
                 .agg(F.min("a").alias("m")))
-        ss = (ls.join(smin, "b")
-              .select(F.col("a"), F.col("b"), F.col("m"))
-              .select(F.explode(F.array(
-                  F.struct(F.least("a", "m").alias("a"),
-                           F.greatest("a", "m").alias("b")),
-                  F.struct(F.least("b", "m").alias("a"),
-                           F.greatest("b", "m").alias("b"))))
-                  .alias("e"))
-              .select("e.a", "e.b")
-              .filter(F.col("a") != F.col("b"))
-              .distinct()
-              .localCheckpoint(eager=True))
-        new_sig = _sig(ss)
-        cur = ss
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"connected_components_large: no fixpoint after "
-            f"max_iter={max_iter} rounds")
+        return (ls.join(smin, "b")
+                .select(F.explode(F.array(
+                    F.struct(F.least("a", "m").alias("a"),
+                             F.greatest("a", "m").alias("b")),
+                    F.struct(F.least("b", "m").alias("a"),
+                             F.greatest("b", "m").alias("b"))))
+                    .alias("e"))
+                .select("e.a", "e.b")
+                .filter(F.col("a") != F.col("b"))
+                .distinct())
+
+    def unchanged(prev: DataFrame, cur: DataFrame) -> bool:
+        def sig(e: DataFrame) -> DataFrame:
+            return e.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum(F.xxhash64(F.concat_ws("|", "a", "b"))
+                                 .cast("decimal(38,0)")), F.lit(0))
+                .alias("h"))
+        a, b = sig(prev).unionAll(sig(cur)).collect()
+        return a == b
+
+    cur, _ = _fixpoint("connected_components_large", seed, step,
+                       unchanged, max_iter)
     sym = cur.select(F.col("a").alias("node"),
                      F.col("b").alias("other")) \
         .union(cur.select(F.col("b").alias("node"),

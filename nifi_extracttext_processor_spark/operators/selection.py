@@ -89,35 +89,6 @@ def _bucket_of(gram: Column, n_buckets: int, md5: bool) -> Column:
     return F.when(gram.isNotNull(), h)
 
 
-def _ngram_buckets(text_col: str, n_buckets: int, md5: bool) -> Column:
-    """Array of hashed unigram+bigram bucket ids for a text column —
-    pure Catalyst (split, transform, hash, pmod). NOTE: hashing inside
-    the transform lambda is interpreted per element; hot paths should
-    explode _ngram_strings first and apply _bucket_of instead."""
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
-                r"\s+"),
-        lambda t: F.length(t) > 0)
-    unis = toks
-    bis = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat(F.element_at(toks, i + 1), F.lit(" "),
-                               F.element_at(toks, i + 2)))
-    ).otherwise(F.array().cast("array<string>"))
-    grams = F.concat(unis, bis)
-    if md5:
-        return F.transform(
-            grams,
-            lambda g: F.pmod(
-                F.conv(F.substring(F.md5(g), 1, 8), 16, 10)
-                .cast("long"),
-                F.lit(n_buckets)))
-    return F.transform(
-        grams, lambda g: F.pmod(F.xxhash64(g), F.lit(n_buckets)))
-
-
 def fit_hash_ngram_model(
     df: DataFrame,
     text_col: str = "text",

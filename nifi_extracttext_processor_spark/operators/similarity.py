@@ -45,26 +45,6 @@ def brute_force_topk(
             .limit(k))
 
 
-def brute_force_topk_sql(
-    query_vec: list[float],
-    k: int = 10,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """DuckDB twin (manual dot/norm — matches Spark's fold order)."""
-    q = "[" + ", ".join(repr(float(x)) for x in query_vec) + "]"
-    v = f"{vec_col}::DOUBLE[]"
-    dot = (f"list_sum(list_transform(list_zip({v}, {q}), "
-           f"p -> p[1] * p[2]))")
-    na = f"sqrt(list_sum(list_transform({v}, x -> x * x)))"
-    nb = f"sqrt(list_sum(list_transform({q}::DOUBLE[], x -> x * x)))"
-    cos = (f"CASE WHEN {na} > 0 AND {nb} > 0 "
-           f"THEN {dot} / ({na} * {nb}) ELSE 0.0 END")
-    return (f"SELECT {id_col}, round({cos}, 4) AS cosine FROM {table} "
-            f"ORDER BY cosine DESC, {id_col} ASC LIMIT {k}")
-
-
 def lsh_topk(
     df: DataFrame,
     query_vec: list[float],

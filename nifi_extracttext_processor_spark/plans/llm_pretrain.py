@@ -77,23 +77,6 @@ def _run_concurrently(tasks: "list") -> list:
         return [f.result() for f in futs]
 
 
-def _map_sources_concurrently(fn, frames: "list[DataFrame]") -> list:
-    """Run one clean pipeline per source on concurrent driver threads
-    (guide §7 scheduling: Spark's scheduler multiplexes jobs submitted
-    from separate threads, so source B's executor stages fill the gaps
-    where source A is doing driver-side work — Lloyd pandas round
-    trips, fixpoint checks, Catalyst planning of the big composed
-    lineages). Sources are independent by construction (per-source
-    dedup/decontamination), so interleaving their jobs cannot change
-    any value — only the wall clock. Results come back in input
-    order; exceptions propagate. Single source short-circuits."""
-    if len(frames) <= 1:
-        return [fn(f) for f in frames]
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=min(4, len(frames))) as ex:
-        return list(ex.map(fn, frames))
-
-
 def clean_source(
     df: DataFrame,
     id_col: str = "doc_id",

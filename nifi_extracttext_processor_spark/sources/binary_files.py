@@ -44,19 +44,3 @@ def read_documents(
             f"INTERVAL {int(min_age_sec)} SECONDS")
         df = df.filter(F.col("modificationTime") <= cutoff)
     return df
-
-
-def list_files_filter(
-    df: DataFrame,
-    min_size: int = 50,
-    min_age_sec: int = 30,
-    file_filter: str = r"^[^.].*",
-) -> DataFrame:
-    """B1 filter semantics over a files-listing table
-    (columns: path, filename, size, age_sec, hidden) — DuckDB-checkable
-    form used by the FIXTURES.md §5 oracle."""
-    return df.filter(
-        (F.col("size") >= min_size)
-        & (F.col("age_sec") >= min_age_sec)
-        & ~F.col("hidden")
-        & F.col("filename").rlike(file_filter))

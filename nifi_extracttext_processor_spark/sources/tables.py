@@ -13,9 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # The conf must be set on *this* session (callers may hand us a session
@@ -33,11 +30,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def read_catalog(spark: SparkSession, path: str,

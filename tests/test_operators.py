@@ -1146,9 +1146,7 @@ class TestRound3AdvisoryFixes:
             cache=False)
         assert [r["v"] for r in routes["hit"].collect()] == [1]
 
-    def test_duplicate_clusters_warns_when_not_converged(self, spark):
-        import warnings
-
+    def test_duplicate_clusters_raises_when_not_converged(self, spark):
         from nifi_extracttext_processor_spark.operators.dedup import (
             duplicate_clusters,
         )
@@ -1156,11 +1154,9 @@ class TestRound3AdvisoryFixes:
                 "again with more words to shingle properly")
         df = spark.createDataFrame(
             [(0, base), (1, base)], "doc_id long, text string")
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            out = duplicate_clusters(df, max_iter=0)
-            out.collect()
-        assert any("fixpoint" in str(w.message) for w in caught)
+        # round 1 relabels doc 1; only round 2 could confirm the fixpoint
+        with pytest.raises(RuntimeError, match="fixpoint"):
+            duplicate_clusters(df, max_iter=1)
 
     def test_duplicate_clusters_converges_silently(self, spark):
         import warnings

@@ -144,8 +144,9 @@ WITH_ORACLE = [n for n in ALL if n in entrymod.oracle_sql()]
 ROWS_ONLY = [n for n in ALL if n not in entrymod.oracle_sql()]
 
 
-@pytest.mark.parametrize("name", WITH_ORACLE)
-def test_query_matches_oracle(spark, sf_dir, ddb, name):
+def assert_matches_oracle(spark, sf_dir, ddb, name):
+    """Run registered query `name` and its DuckDB oracle; assert the
+    same columns, dtypes, row count and order-insensitive values."""
     q = entrymod.queries()[name]
     sdf = q(spark, sf_dir)
     spark_rows = [r.asDict() for r in sdf.collect()]
@@ -163,6 +164,11 @@ def test_query_matches_oracle(spark, sf_dir, ddb, name):
     o = _rowset(oracle_rows, cols, bridge=True)
     mismatches = [(a, b) for a, b in zip(s, o) if a != b][:5]
     assert s == o, f"{name}: first diffs {mismatches}"
+
+
+@pytest.mark.parametrize("name", WITH_ORACLE)
+def test_query_matches_oracle(spark, sf_dir, ddb, name):
+    assert_matches_oracle(spark, sf_dir, ddb, name)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
