@@ -253,7 +253,8 @@ def route_by_error(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     One narrow filter each; Catalyst pushes the predicate into both
     plans. Callers fanning out to multiple sinks should .cache() `df`
-    first (SURVEY §3 — the template's queue fan-out made explicit).
+    first (SURVEY §3 — the template's queue fan-out made explicit);
+    `plans.flow.document_flow` now does this itself.
     """
     return (df.filter(F.col("error").isNull()),
             df.filter(F.col("error").isNotNull()))

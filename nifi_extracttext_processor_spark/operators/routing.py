@@ -63,7 +63,8 @@ def query_routes(
     a module lock makes register+analyze safe for concurrent pipelines
     in one session. With cache=True the INPUT df is marked cached so
     the N routes share one scan; the caller owns that cache — call
-    df.unpersist() when the routes are consumed.
+    df.unpersist() when the routes are consumed (for the document flow,
+    `FlowResult.release()` does this).
     """
     spark = df.sparkSession
     if cache:

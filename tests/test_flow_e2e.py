@@ -62,13 +62,91 @@ def test_flow_to_files(spark, corpus_dir, tmp_path):
     assert good.count() == counts["good"]
 
 
-def test_flow_single_scan_fanout(spark, corpus_dir):
-    """The fan-out point must be cached: all three routes reuse one
-    InMemoryRelation instead of re-running extraction per route."""
-    result = document_flow(spark, corpus_dir)
-    plan = (result.routes["good"]._jdf.queryExecution()
-            .optimizedPlan().toString())
-    assert "InMemoryRelation" in plan
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_flow_single_scan_fanout(spark, tmp_path):
+    """Both fan-out points are cached: every port (failures, needs_ocr
+    and each route) reads an InMemoryRelation instead of re-running
+    extraction, and the cached per-file frame holds no raw bytes
+    beyond the needs_ocr rows that apply_ocr reads."""
+    from tests.fixtures.builders import build_scanned_pdf
+
+    d = tmp_path / "mixed"
+    d.mkdir()
+    (d / "good.pdf").write_bytes(build_pdf(["spark is fast and great"]))
+    (d / "scan.pdf").write_bytes(build_scanned_pdf())
+    (d / "broken.pdf").write_bytes(b"%PDF-1.4 nothing here")
+    result = document_flow(spark, str(d))
+    try:
+        ports = [result.failures, result.needs_ocr,
+                 *result.routes.values()]
+        for df in ports:
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "InMemoryRelation" in plan
+        assert "content" not in result.extracted.columns
+        assert result.extracted.count() == 3
+    finally:
+        result.release()
+
+    result = document_flow(spark, str(d), ocr_fn=lambda data: "RECOGNIZED")
+    try:
+        rows = result.extracted.select("filename", "needs_ocr",
+                                       "content").collect()
+        assert {r["filename"] for r in rows if r["needs_ocr"]} == \
+            {"scan.pdf"}
+        assert all((r["content"] is not None) == r["needs_ocr"]
+                   for r in rows)
+    finally:
+        result.release()
+
+
+def test_flow_to_files_releases_caches(spark, tmp_path):
+    """run_flow_to_files leaves no cache behind, so a second run over a
+    changed directory sees the new files instead of stale routes."""
+    d = tmp_path / "docs"
+    d.mkdir()
+    (d / "a.pdf").write_bytes(build_pdf(["spark is fast and great"]))
+    spark.catalog.clearCache()
+    counts = run_flow_to_files(spark, str(d), str(tmp_path / "out1"))
+    assert (counts["good"], counts["bad"]) == (1, 0)
+    assert _cache_is_empty(spark)
+
+    (d / "b.pdf").write_bytes(build_pdf(["love this great engine"]))
+    (d / "c.pdf").write_bytes(build_pdf(["terrible slow awful results"]))
+    counts = run_flow_to_files(spark, str(d), str(tmp_path / "out2"))
+    assert (counts["good"], counts["bad"]) == (2, 1)
+    assert _cache_is_empty(spark)
+
+
+def test_flow_to_files_releases_caches_on_raise(spark, corpus_dir,
+                                                tmp_path):
+    from nifi_extracttext_processor_spark.sinks.connectors import (
+        avro_available,
+    )
+    if avro_available(spark):
+        pytest.skip("spark-avro is on the classpath: fmt='avro' works")
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="Avro"):
+        run_flow_to_files(spark, corpus_dir, str(tmp_path / "out"),
+                          fmt="avro")
+    assert _cache_is_empty(spark)
+
+
+def test_flow_all_failures_infers_empty_schema(spark, tmp_path):
+    """An input where every file fails extraction has an empty record
+    stream: schema inference returns struct<> instead of raising."""
+    d = tmp_path / "corrupt"
+    d.mkdir()
+    (d / "broken.pdf").write_bytes(b"%PDF-1.4 nothing here")
+    result = document_flow(spark, str(d))
+    try:
+        assert result.inferred_schema == "struct<>"
+        assert [r["filename"] for r in result.failures.collect()] == \
+            ["broken.pdf"]
+    finally:
+        result.release()
 
 
 def test_flow_handles_all_formats(spark, tmp_path):
