@@ -3,6 +3,16 @@
 Local testing uses local[N]; the configs below are the ones that matter
 at cluster scale too (AQE, skew handling, Arrow batching for large text
 payloads — SURVEY §4).
+
+Python workers run under ``pydaemon`` (``spark.python.daemon.module``):
+pyspark 4.1.2 calls ``importlib.invalidate_caches()`` once per task
+(``pyspark/worker_util.py:144``), and on CPython 3.11 every zipimporter
+over ``pyspark.zip`` then re-reads the archive's central directory
+(``zipimport.py:329``), about 0.23 s of worker CPU per task. The package
+daemon re-reads an archive only when it changed. A session built without
+``get_spark`` uses the stock daemon and still pays that per task. The
+package's parent directory goes on the workers' ``PYTHONPATH``, so the
+daemon starts whatever the driver's working directory is.
 """
 
 from __future__ import annotations
@@ -11,6 +21,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+# directory holding this package, for the Python workers' PYTHONPATH
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
 
 _BLAS_ENV = ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
              "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS")
@@ -55,6 +69,10 @@ def get_spark(
         # testdata events.ts is TIMESTAMP(NANOS) which vanilla Spark
         # rejects; read as long and convert in sources.tables.load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # workers skip the per-task pyspark.zip re-read (module docstring)
+        .config("spark.python.daemon.module",
+                "nifi_extracttext_processor_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     # cluster mode: executors are separate JVMs and do not inherit the
     # driver's environment — ship the BLAS pin explicitly
