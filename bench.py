@@ -10,10 +10,12 @@ projections we're benchmarking.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import sys
+import tempfile
 import time
 
 import __spark_entry__ as entry
@@ -92,9 +94,11 @@ HEADLINE = [
     "fuzzy_edit_join",     # prefix-filtered edit-similarity self-join
     "nbayes_predict",      # NB train (bounded aggs) + broadcast score
     "events_gap_fill",     # per-key spine explode + keyed fill windows
-    "llm_pretrain",        # the capstone composition: 2-source clean
-                           # (near+semantic dedup, decontaminate) +
-                           # token mixing + split + BPE + packing
+    "llm_pretrain",        # the capstone composition, timed as the
+                           # package's llm_pretrain_plan: 2-source
+                           # clean (near+semantic dedup, decontaminate)
+                           # + token mixing + split + BPE + packing +
+                           # shard write, then the manifest read-back
     "hll_token_distinct",  # r10 sketch family: HLL registers over a
                            # token explode (map-side-combinable agg)
     "ab_bootstrap_ci",     # r11: B=60 Poisson resamples — explode x B
@@ -242,71 +246,28 @@ def _q_web_corpus_prep(spark, sf_dir):
     return prepare_web_corpus(docs, min_quality=0.3)
 
 
+@contextlib.contextmanager
 def _q_llm_pretrain(spark, sf_dir):
-    """The composed pretraining pipeline over the documents table
-    split into two pseudo-sources (even/odd ids, 60/40 token
-    weights), with the embeddings sidecar for semantic dedup and a
-    benchmark slice for decontamination; BPE trains on the train
-    split, and the returned frame is the packed sequence assignment
-    (forced by the noop sink like every headliner)."""
-    from nifi_extracttext_processor_spark.operators.corpus import (
-        pack_sequences,
-    )
-    from nifi_extracttext_processor_spark.operators.tokenize import (
-        bpe_tokenize, train_bpe,
-    )
+    """The package's composed pretraining plan, llm_pretrain_plan, over
+    the documents table split into two pseudo-sources (even/odd ids,
+    60/40 token weights), with the embeddings sidecar for semantic
+    dedup and a benchmark slice for decontamination. The plan runs and
+    writes its shards on entry; the yielded frame is the manifest read
+    back from them, and the shards are removed on exit."""
     from nifi_extracttext_processor_spark.plans.llm_pretrain import (
-        build_pretrain_corpus, clean_source,
+        llm_pretrain_plan,
     )
     from nifi_extracttext_processor_spark.sources.tables import load_table
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     emb = load_table(spark, sf_dir, "embeddings") \
         .withColumnRenamed("vec_id", "doc_id")
-    bench_docs = docs.filter(F.col("doc_id") % 97 == 0)
     srcs = [(docs.filter(F.col("doc_id") % 2 == 0), 0.6),
             (docs.filter(F.col("doc_id") % 2 == 1), 0.4)]
-    # hoist the benchmark n-gram table ONCE across sources — the
-    # llm_pretrain_plan shape (r10 hoist); the inline composition here
-    # previously re-derived it per source (~0.4 s/source at sf0.1,
-    # measured in the r11 adjudication — real but not the drift)
-    from nifi_extracttext_processor_spark.operators.corpus import (
-        benchmark_ngrams,
-    )
-    from nifi_extracttext_processor_spark.operators.lifecycle import (
-        track_persist,
-    )
-    bng = track_persist(benchmark_ngrams(bench_docs, "text", 8))
-
-    def _clean_one(s):
-        p = track_persist(
-            clean_source(s, near_threshold=0.5, embeddings=emb,
-                         semantic_k=32, benchmark_ngram_table=bng)
-            .select("doc_id", "text"))
-        p.count()  # keep the dedup chain inside the parallel region
-        return p
-
-    # r17 third lane: bng materializes on its own thread NEXT TO the
-    # source cleans (they consume it only at their last stage; a lost
-    # race costs a duplicate bounded computation, never a value) —
-    # mirrors plans/llm_pretrain.llm_pretrain_plan
-    from nifi_extracttext_processor_spark.plans.llm_pretrain import (
-        _run_concurrently,
-    )
-    results = _run_concurrently(
-        [lambda: bng.count()]
-        + [(lambda s=s: _clean_one(s)) for s, _w in srcs])
-    cleaned = list(zip(results[1:], [w for _s, w in srcs]))
-    corpus = track_persist(build_pretrain_corpus(cleaned))
-    # persist: the BPE histogram, the tokenize kernel and the packer
-    # all traverse the mix/dedup_exact/split chain otherwise (r17;
-    # the histogram agg below materializes every partition)
-    merges = train_bpe(corpus.filter(F.col("split") == "train"),
-                       n_merges=200, max_words=20000)
-    # emit=("doc_id",): pack_sequences needs only (id, count) — don't
-    # round-trip the corpus text back OUT of the Arrow kernel
-    toked = bpe_tokenize(corpus, merges, tokens_col=None,
-                         emit=("doc_id",))
-    return pack_sequences(toked, budget=2048, count_col="n_bpe_real")
+    with tempfile.TemporaryDirectory(prefix="bench-llm_pretrain-") as out:
+        manifest, _merges = llm_pretrain_plan(
+            srcs, out, benchmark=docs.filter(F.col("doc_id") % 97 == 0),
+            embeddings=emb, n_merges=200)
+        yield manifest
 
 
 def _q_zorder_cluster(spark, sf_dir):
@@ -393,26 +354,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entry.queries()
-    # JVM/codegen warmup on a trivial action
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # Python-worker warmup (r16): pre-fork one Arrow worker per core
-    # with the heavy imports done, exactly parallel to the JVM warmup
-    # above — worker reuse then serves every query from the warm pool,
-    # so per-query timings measure plan cost, not the one-time daemon
-    # fork + pandas/numpy/pyarrow import (~1-3 s/worker on some VMs).
-    # A real cluster pays that cost once per executor lifetime, not
-    # per query; timing it inside whichever query happens to run the
-    # session's first Python stage was a measurement artifact.
-    cores = spark.sparkContext.defaultParallelism
-
-    def _touch(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-        yield from batches
-
-    (spark.range(cores).repartition(cores)
-     .mapInPandas(_touch, "id long").count())
+    warm_up(spark)
 
     # Per-query fresh-session mode (drift-adjudication protocol,
     # VERDICT r9 task 2): SPARK_GRAFT_ONLY=a,b runs just those
@@ -432,16 +374,11 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for name in selected:
-        fn = LOCAL.get(name) or qs[name]
         t0 = time.perf_counter()
-        force(fn(spark, sf_dir))
-        timings[name] = round(time.perf_counter() - t0, 3)
+        with built(LOCAL.get(name) or qs[name], spark, sf_dir) as df:
+            force(df)
+            timings[name] = round(time.perf_counter() - t0, 3)
         print(f"  {name}: {timings[name]}s", file=sys.stderr)
-        # free tracked persists (minhash_base, substring-dedup occ, …)
-        # between queries so block-manager residue from one query
-        # never skews the next; blocking so eviction work cannot
-        # overlap the next query's timed window
-        lifecycle.release_all(blocking=True)
 
     total = round(sum(timings.values()), 3)
     print(json.dumps({
@@ -452,6 +389,44 @@ def main() -> None:
         "sf": sf,
     }))
     spark.stop()
+
+
+@contextlib.contextmanager
+def built(fn, spark, sf_dir):
+    """Yield the row's DataFrame; a row that writes files (llm_pretrain)
+    is a context manager that yields it and removes what it wrote.
+    Afterwards free the row's tracked persists (minhash_base,
+    substring-dedup occ, ...) so block-manager residue from one row
+    never skews the next, blocking so eviction cannot overlap the next
+    row's timed window; both also when the row raises."""
+    with contextlib.ExitStack() as stack:
+        stack.callback(lifecycle.release_all, blocking=True)
+        out = fn(spark, sf_dir)
+        if isinstance(out, contextlib.AbstractContextManager):
+            out = stack.enter_context(out)
+        yield out
+
+
+def warm_up(spark) -> None:
+    """JVM/codegen warm-up on a trivial action, then the Python-worker
+    warm-up (r16): pre-fork one Arrow worker per core with the heavy
+    imports done. Worker reuse then serves every query from the warm
+    pool, so per-query timings measure plan cost, not the one-time
+    daemon fork + pandas/numpy/pyarrow import (~1-3 s/worker on some
+    VMs). A real cluster pays that cost once per executor lifetime,
+    not per query; timing it inside whichever query happens to run
+    the first Python stage was a measurement artifact."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    cores = spark.sparkContext.defaultParallelism
+
+    def _touch(batches):
+        import numpy  # noqa: F401
+        import pandas  # noqa: F401
+        import pyarrow  # noqa: F401
+        yield from batches
+
+    (spark.range(cores).repartition(cores)
+     .mapInPandas(_touch, "id long").count())
 
 
 if __name__ == "__main__":

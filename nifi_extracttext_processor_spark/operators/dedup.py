@@ -26,12 +26,12 @@ from pyspark.sql import functions as F
 from .rounding import dround
 
 
-# logical-plan nodes whose presence means the frame has already been
-# through (or will introduce) a shuffle — its partitioning is the
-# shuffle width, not the input file count, so spreading again is a
-# pure extra Exchange
-_WIDE_NODES = ("Repartition", "Join", "Aggregate", "Window",
-               "Deduplicate", "Sort ", "Sort\n")
+# Catalyst TreePatterns of the logical nodes whose presence means the
+# frame has already been through (or will introduce) a shuffle — its
+# partitioning is the shuffle width, not the input file count, so
+# spreading again is a pure extra Exchange
+_WIDE_PATTERNS = ("JOIN", "AGGREGATE", "WINDOW", "REPARTITION_OPERATION",
+                  "SORT", "DISTINCT_LIKE")
 
 
 def _spread(df: DataFrame, already_wide: bool = False) -> DataFrame:
@@ -50,11 +50,11 @@ def _spread(df: DataFrame, already_wide: bool = False) -> DataFrame:
     shuffle-derived intermediate (post-groupBy/join/repartition) still
     reports its LEAF scan's files (or zero when driver-local) but is
     already at shuffle width — repartitioning it again is a pure extra
-    Exchange (the r8 semantic_dedup_k256 +44% regression). So before
-    spreading, the ANALYZED logical plan (no physical planning cost,
-    no RDD conversion) is sniffed for shuffle-introducing nodes and
-    left alone when one is found. Callers that know their input is
-    wide pass `already_wide=True`."""
+    Exchange (the r8 semantic_dedup_k256 +44% regression). So the
+    ANALYZED logical plan (no physical planning, no RDD conversion) is
+    asked for shuffle-introducing node patterns (`containsPattern`:
+    plan structure, never column names) and such a frame is left
+    alone. Callers that know their input is wide pass already_wide."""
     if already_wide:
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
@@ -68,11 +68,11 @@ def _spread(df: DataFrame, already_wide: bool = False) -> DataFrame:
     # scan, so a shuffle-derived frame over one file still reports 1;
     # the logical plan is the authority on whether a shuffle already
     # widened it
-    try:
-        logical = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        logical = ""
-    if any(n in logical for n in _WIDE_NODES):
+    patterns = getattr(getattr(df._sc._jvm.org.apache.spark.sql.catalyst
+                               .trees, "TreePattern$"), "MODULE$")
+    logical = df._jdf.queryExecution().analyzed()
+    if any(logical.containsPattern(getattr(patterns, p)())
+           for p in _WIDE_PATTERNS):
         return df
     return df.repartition(target)
 

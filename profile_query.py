@@ -14,9 +14,9 @@ optimization rounds adjudicate from:
 - run/cpu per stage >> 1 on a compute stage = memory stall / steal,
   not plan cost;
 - a 32-task stage with ~2 s run per task and ~zero CPU is Python
-  worker WAIT (executor metrics cannot see worker CPU) — the two
-  bench warmups below exist so that cost is not charged to the first
-  profiled query's Python stage;
+  worker WAIT (executor metrics cannot see worker CPU) — bench.warm_up
+  runs first so that cost is not charged to the first profiled
+  query's Python stage;
 - tasks=1 on a scan stage = single-row-group parquet input (the
   `_spread` adjudications in OPTIMIZATION_r16.md start from this).
 
@@ -41,7 +41,6 @@ def profile(query: str, sf_dir: str) -> None:
     os.makedirs(evdir)
 
     import bench
-    from nifi_extracttext_processor_spark.operators import lifecycle
     from nifi_extracttext_processor_spark.session import get_spark
 
     # resolve the query BEFORE the session spins up: a typo'd name
@@ -65,27 +64,15 @@ def profile(query: str, sf_dir: str) -> None:
     })
     spark.sparkContext.setLogLevel("ERROR")
 
-    # the same two warmups bench.py runs, for the same reason: JVM
-    # codegen + the per-core Python worker pool are session costs, not
-    # query costs
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    cores = spark.sparkContext.defaultParallelism
-
-    def _touch(batches):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-        yield from batches
-
-    (spark.range(cores).repartition(cores)
-     .mapInPandas(_touch, "id long").count())
-
-    fn = bench.LOCAL.get(query) or qs[query]
+    # JVM codegen + the per-core Python worker pool are session costs,
+    # not query costs
+    bench.warm_up(spark)
     spark.sparkContext.setJobDescription(query)
     t0 = time.perf_counter()
-    bench.force(fn(spark, sf_dir))
-    wall = time.perf_counter() - t0
-    lifecycle.release_all(blocking=True)
+    with bench.built(bench.LOCAL.get(query) or qs[query], spark,
+                     sf_dir) as df:
+        bench.force(df)
+        wall = time.perf_counter() - t0
     spark.stop()
 
     run = cpu = sh_w = 0.0

@@ -182,6 +182,7 @@ class TestSpreadGuard:
         assert "Exchange RoundRobinPartitioning" in plan
 
     def test_shuffle_derived_not_respread(self, spark, tmp_path):
+        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
         from nifi_extracttext_processor_spark.operators.dedup import (
@@ -195,9 +196,23 @@ class TestSpreadGuard:
             base.groupBy("k").agg(F.count("*").alias("n")),
             base.repartition(8, "k"),
             base.join(base.select("id"), "id"),
+            base.withColumn("r", F.row_number().over(
+                Window.partitionBy("k").orderBy("id"))),
+            base.dropDuplicates(["k"]),
+            base.orderBy("k"),
         ):
             plan = _plan(_spread(derived))
             assert "RoundRobinPartitioning" not in plan
+
+    def test_wide_sounding_column_name_still_spreads(self, spark):
+        """Plan structure decides, not plan text: a narrow frame with a
+        column named after a wide node is spread."""
+        from nifi_extracttext_processor_spark.operators.dedup import (
+            _spread,
+        )
+        df = spark.range(10).withColumnRenamed("id", "Window")
+        plan = _plan(_spread(df))
+        assert "RoundRobinPartitioning" in plan
 
     def test_already_wide_flag(self, spark, tmp_path):
         from nifi_extracttext_processor_spark.operators.dedup import (
