@@ -14,6 +14,7 @@ import contextlib
 import json
 import os
 import re
+import signal
 import sys
 import tempfile
 import time
@@ -347,6 +348,10 @@ def force(df) -> None:
 
 
 def main() -> None:
+    # SIGTERM unwinds like an exception, so `built` still removes what
+    # the running row wrote (SIGKILL cannot be caught)
+    signal.signal(signal.SIGTERM, lambda signum, _frame: sys.exit(
+        128 + signum))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0

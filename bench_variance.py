@@ -78,8 +78,9 @@ def main() -> None:
         # Per-query fresh-session mode (drift adjudication, VERDICT r9
         # task 2): each run executes ONLY the named headliners, so a
         # query's standalone median is free of 45-query
-        # session-composition effects. Prints the stats JSON; does NOT
-        # touch BENCH_NOTES.md (the full-session protocol's file).
+        # session-composition effects. Prints the stats JSON with the
+        # raw per-run records; does NOT touch BENCH_NOTES.md (the
+        # full-session protocol's file).
         i = argv.index("--only")
         only = argv[i + 1]
         del argv[i:i + 2]
@@ -189,6 +190,7 @@ def main() -> None:
             "queries": {q: s["median"] for q, s in stats.items()},
             "spread_pct": {q: s["spread_pct"]
                            for q, s in stats.items()},
+            "runs": runs,
         }))
         return
 

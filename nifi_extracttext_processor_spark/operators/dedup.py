@@ -453,6 +453,16 @@ WHERE round(CASE WHEN len(list_distinct(list_concat(sh1, sh2))) > 0
 _HEX = "0123456789abcdef"
 
 
+def _hex_hamming(a: Column, b: Column) -> Column:
+    """Popcount of XOR over two 16-hex-char hashes, per nibble."""
+    idx = F.sequence(F.lit(1), F.lit(16))
+    nib = lambda s, i: F.instr(F.lit(_HEX), F.substring(s, i, 1)) - 1
+    return F.aggregate(
+        idx, F.lit(0),
+        lambda acc, i: acc + F.bit_count(
+            nib(a, i).bitwiseXOR(nib(b, i))))
+
+
 def simhash64_table(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text",
                     out_col: str = "simhash",
@@ -556,16 +566,6 @@ def simhash_pairs(
             F.substring(F.col("sim"), b * 4 + 1, 4) for b in range(4)
         ])).alias("chunk_id", "chunk"))
     l, r = banded.alias("l"), banded.alias("r")
-
-    def hamming(a: Column, b: Column) -> Column:
-        # per-hex-digit popcount of XOR via nibble lookup
-        idx = F.sequence(F.lit(1), F.lit(16))
-        nib = lambda s, i: F.instr(F.lit(_HEX), F.substring(s, i, 1)) - 1
-        return F.aggregate(
-            idx, F.lit(0),
-            lambda acc, i: acc + F.bit_count(
-                nib(a, i).bitwiseXOR(nib(b, i))))
-
     return (l.join(r, (F.col("l.chunk_id") == F.col("r.chunk_id"))
                    & (F.col("l.chunk") == F.col("r.chunk"))
                    & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
@@ -573,7 +573,7 @@ def simhash_pairs(
                     F.col(f"r.{id_col}").alias("id2"),
                     F.col("l.sim").alias("s1"), F.col("r.sim").alias("s2"))
             .dropDuplicates(["id1", "id2"])
-            .withColumn("hamming", hamming(F.col("s1"), F.col("s2")))
+            .withColumn("hamming", _hex_hamming(F.col("s1"), F.col("s2")))
             .filter(F.col("hamming") <= max_hamming)
             .select("id1", "id2", "hamming"))
 

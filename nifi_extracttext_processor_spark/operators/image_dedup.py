@@ -20,7 +20,7 @@ Scale shape:
   2^b-bit band chunks; pigeonhole guarantees hamming ≤ n_bands - 1
   implies an identical chunk, so ONE hash equi-join on (chunk_id,
   chunk) keyed by longs finds every candidate, then an exact popcount
-  filter — the simhash_pairs machinery (operators/dedup.py:442)
+  filter — the simhash_pairs machinery (operators/dedup.py)
   applied to image hashes. Only (id, 16-char hash) rows ever shuffle,
   never pixels.
 - `fake=True` swaps the decode+DCT kernel for a deterministic
@@ -37,10 +37,10 @@ from __future__ import annotations
 import math
 from typing import Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_HEX = "0123456789abcdef"
+from .dedup import _HEX, _hex_hamming
 
 DEFAULT_IMG_SIZE = 32
 DEFAULT_HASH_SIZE = 8
@@ -238,16 +238,6 @@ def _n_bands(max_hamming: int) -> int:
         if b > max_hamming:
             return b
     raise AssertionError
-
-
-def _hex_hamming(a: Column, b: Column) -> Column:
-    """Popcount of XOR over two 16-hex-char hashes, per nibble."""
-    idx = F.sequence(F.lit(1), F.lit(16))
-    nib = lambda s, i: F.instr(F.lit(_HEX), F.substring(s, i, 1)) - 1
-    return F.aggregate(
-        idx, F.lit(0),
-        lambda acc, i: acc + F.bit_count(
-            nib(a, i).bitwiseXOR(nib(b, i))))
 
 
 def phash_pairs(

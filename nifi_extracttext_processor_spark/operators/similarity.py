@@ -29,6 +29,20 @@ def _as_double(col: str) -> Column:
     return F.col(col).cast("array<double>")
 
 
+def _band_cols(vec: Column, hps, bands: int) -> list[Column]:
+    """Per-band band keys of `vec`: the hyperplane-sign bits ('1' iff
+    dot >= 0) of the hyperplanes `hps`, concatenated per band."""
+    bits = []
+    for hp in hps:
+        lit = F.array(*[F.lit(x) for x in hp])
+        dot = F.aggregate(F.zip_with(vec, lit, lambda x, y: x * y),
+                          F.lit(0.0), lambda a, x: a + x)
+        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
+    per_band = len(hps) // bands
+    return [F.concat(*bits[b * per_band:(b + 1) * per_band])
+            for b in range(bands)]
+
+
 def brute_force_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -60,34 +74,10 @@ def lsh_topk(
     literals). This form re-hashes the table per query; at corpus scale
     use build_lsh_index + lsh_topk_indexed (partition-pruned lookups,
     identical results)."""
-    dim = len(query_vec)
-    hps = random_hyperplanes(dim, planes)
-
-    def bits_of(vec: Column) -> list[Column]:
-        out = []
-        for hp in hps:
-            lit = F.array(*[F.lit(x) for x in hp])
-            dot = F.aggregate(F.zip_with(vec, lit, lambda x, y: x * y),
-                              F.lit(0.0), lambda a, x: a + x)
-            out.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return out
-
-    def py_bits() -> list[str]:
-        out = []
-        for hp in hps:
-            dot = sum(x * y for x, y in zip(query_vec, hp))
-            out.append("1" if dot >= 0 else "0")
-        return out
-
-    per_band = planes // bands
-    qbits = py_bits()
-    qbands = ["".join(qbits[b * per_band:(b + 1) * per_band])
-              for b in range(bands)]
-
+    hps = random_hyperplanes(len(query_vec), planes)
+    qbands = query_band_keys(query_vec, planes, bands)
     v = df.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    bits = bits_of(F.col("v"))
-    band_cols = [F.concat(*bits[b * per_band:(b + 1) * per_band])
-                 for b in range(bands)]
+    band_cols = _band_cols(F.col("v"), hps, bands)
     match = None
     for bc, qb in zip(band_cols, qbands):
         cond = bc == F.lit(qb)
@@ -114,20 +104,7 @@ def _lsh_banded(df: DataFrame, id_col: str, vec_col: str,
         dim = len(df.select(vec_col).first()[0])
     hps = random_hyperplanes(dim, planes)
     v = df.select(F.col(id_col), _as_double(vec_col).alias("v"))
-
-    def bits_of(vec: Column) -> list[Column]:
-        out = []
-        for hp in hps:
-            lit = F.array(*[F.lit(x) for x in hp])
-            dot = F.aggregate(F.zip_with(vec, lit, lambda x, y: x * y),
-                              F.lit(0.0), lambda a, x: a + x)
-            out.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return out
-
-    bits = bits_of(F.col("v"))
-    per_band = planes // bands
-    band_cols = [F.concat(*bits[b * per_band:(b + 1) * per_band])
-                 for b in range(bands)]
+    band_cols = _band_cols(F.col("v"), hps, bands)
     keep = [id_col, "v"] if keep_vec else [id_col]
     return v.select(
         *keep,

@@ -51,18 +51,56 @@ def read_catalog(spark: SparkSession, path: str,
     return df.select(*cols) if cols else df
 
 
+def land_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write `df` as the `batch=<batch_id>` partition of `path` in
+    dynamic-partition-overwrite mode: foreachBatch is at-least-once,
+    so a replayed batch overwrites its own partition instead of
+    appending the same rows twice."""
+    (df.withColumn("batch", F.lit(int(batch_id)))
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("batch").parquet(path))
+
+
+def latest_batch(spark: SparkSession, path: str,
+                 before_batch: "int | None" = None):
+    """Newest `batch=` partition of a snapshot store (every batch lands
+    the FULL state) without its column — optionally the newest
+    committed strictly before `before_batch` — or None before the
+    first batch. A store whose newest partition is compact_catalog's
+    reserved `batch=-1` holds the UNION of its old snapshots, not one
+    of them, so reading it raises ValueError."""
+    df = read_catalog(spark, path)
+    if df is None:
+        return None
+    if before_batch is not None:
+        df = df.filter(F.col("batch") < int(before_batch))
+    latest = df.agg(F.max("batch").alias("m")).first()["m"]
+    if latest is None:
+        return None
+    if latest == -1:
+        raise ValueError(
+            f"{path} was compacted: batch=-1 unions its snapshots; "
+            "a snapshot store must never be compacted")
+    return df.filter(F.col("batch") == latest).drop("batch")
+
+
 # 128 MiB per compacted file — one comfortable task's worth
 _COMPACT_TARGET_BYTES = 128 << 20
 
 
 def compact_catalog(spark: SparkSession, path: str,
                     preserve_partitions: bool = False) -> int:
-    """Compact an append-only catalog directory (fingerprints,
-    processed-segment paths, batch-partitioned streaming catalogs)
-    that has accreted one small parquet file per micro-batch/run —
+    """Compact a UNION catalog — every row of every batch/run counts:
+    the fingerprint, phash, audio-fingerprint and processed-path
+    catalogs — that has accreted one small parquet file per
+    micro-batch/run —
     the classic small-file killer: at 100 TB a year-old catalog is
     10^5-10^6 tiny files and every read pays the listing + open cost.
-    Returns the number of old files removed.
+    Returns the number of old files removed. NEVER compact a snapshot
+    store (latest_batch: stream_rollup/hll/cms/histogram/km state,
+    stream_scd2 history): folding its snapshots into `batch=-1`
+    unions them, and latest_batch then raises.
 
     FAIL-SAFE ORDERING, not atomicity: a dedup/progress catalog has
     asymmetric failure modes — DUPLICATE rows are benign (semi/anti
@@ -90,8 +128,8 @@ def compact_catalog(spark: SparkSession, path: str,
 
     `preserve_partitions=False` (default) folds a single-level
     partitioned catalog into the reserved `<col>=-1` partition —
-    right when the partition value is bookkeeping (streaming
-    `batch=` ids). Pass `preserve_partitions=True` when the value is
+    right when the partition value is bookkeeping (a union catalog's
+    streaming `batch=` ids). Pass `preserve_partitions=True` when the value is
     SEMANTIC — a pruning key like the bucketed fingerprint catalog's
     `bucket=` (dedup.update_fingerprint_catalog_bucketed) — to
     compact each partition's files in place instead (one file per

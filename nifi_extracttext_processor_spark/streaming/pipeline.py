@@ -7,6 +7,18 @@ The reference needs no watermarks (no event-time ops), but
 `windowed_event_counts` shows the watermarked shape used by the
 events-stream extension, and `sessionize_events` demonstrates custom
 stateful logic via applyInPandasWithState.
+
+The foreachBatch sinks land every micro-batch as a `batch=<id>`
+partition through sources.tables.land_batch (dynamic partition
+overwrite, so an at-least-once replay rewrites its own partition).
+Two layouts share that write:
+  * a UNION catalog (stream_web_corpus, stream_image_dedup,
+    stream_audio_dedup): every batch counts and sources.tables
+    .read_catalog reads them all; compact_catalog is safe;
+  * a SNAPSHOT store (stream_scd2 and the _snapshot_sink family):
+    each batch lands the FULL state, sources.tables.latest_batch
+    reads the newest; compaction is never safe (it unions the
+    snapshots, and latest_batch then raises).
 """
 
 from __future__ import annotations
@@ -14,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..operators.rounding import dround
+from ..sources.tables import land_batch, latest_batch, read_catalog
 
 from pyspark.sql.types import (
     LongType, StringType, StructField, StructType, TimestampType,
@@ -465,7 +478,6 @@ def stream_semantic_dedup(
     the catalog is large enough and pass them via functools.partial
     (re-fitting each batch re-clusters the WHOLE catalog)."""
     from ..operators.clustering import semantic_dedup_incremental
-    from ..sources.tables import read_catalog
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -578,7 +590,6 @@ def stream_web_corpus(
         token_stats,
     )
     from ..plans.web_corpus import _records_to_documents
-    from ..sources.tables import read_catalog
 
     # path-form models resolve ONCE (first batch) and stay pinned for
     # the stream's lifetime — the train-once/score-for-months contract
@@ -639,16 +650,9 @@ def stream_web_corpus(
                                        id_col="doc_id",
                                        text_col="text")
         kept = token_stats(kept, "text").localCheckpoint(eager=True)
-        kept = kept.withColumn("batch", F.lit(int(batch_id)))
-        (kept.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(output_dir))
-        (fingerprint(kept.select("doc_id", "text"), "text")
-         .select("fingerprint")
-         .withColumn("batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(catalog_dir))
+        land_batch(kept, output_dir, batch_id)
+        land_batch(fingerprint(kept.select("doc_id", "text"), "text")
+                   .select("fingerprint"), catalog_dir, batch_id)
 
     return _batch
 
@@ -738,7 +742,6 @@ def stream_image_dedup(
     from ..operators.image_dedup import (
         phash64_table, phash_dedup_incremental,
     )
-    from ..sources.tables import read_catalog
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -749,17 +752,11 @@ def stream_image_dedup(
             batch_df, catalog, content_col=content_col,
             id_col=id_col, max_hamming=max_hamming, fake=fake)
         kept = kept.localCheckpoint(eager=True)
-        (kept.withColumn("batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(output_dir))
-        (phash64_table(kept, content_col, id_col, out_col="phash",
-                       fake=fake)
-         .select("phash").filter(F.col("phash").isNotNull()).distinct()
-         .withColumn("batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(catalog_dir))
+        land_batch(kept, output_dir, batch_id)
+        land_batch(phash64_table(kept, content_col, id_col,
+                                 out_col="phash", fake=fake)
+                   .select("phash").filter(F.col("phash").isNotNull())
+                   .distinct(), catalog_dir, batch_id)
 
     return _batch
 
@@ -789,7 +786,6 @@ def stream_audio_dedup(
     from ..operators.audio_dedup import (
         audio_dedup_incremental, audio_fingerprints,
     )
-    from ..sources.tables import read_catalog
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -803,19 +799,12 @@ def stream_audio_dedup(
             id_col=id_col, min_matches=min_matches,
             max_hash_freq=max_hash_freq, fake=fake)
         kept = kept.localCheckpoint(eager=True)
-        (kept.withColumn("batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(output_dir))
-        (audio_fingerprints(kept, id_col=id_col,
-                            content_col=content_col, fake=fake)
-         .filter(F.col("fp").isNotNull())
-         .select(F.col(id_col).cast("string").alias("cat_id"),
-                 "t", "fp")
-         .withColumn("batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(catalog_dir))
+        land_batch(kept, output_dir, batch_id)
+        land_batch(audio_fingerprints(kept, id_col=id_col,
+                                      content_col=content_col, fake=fake)
+                   .filter(F.col("fp").isNotNull())
+                   .select(F.col(id_col).cast("string").alias("cat_id"),
+                           "t", "fp"), catalog_dir, batch_id)
 
     return _batch
 
@@ -849,8 +838,8 @@ def stream_scd2(
     is byte-identical to the committed partition. A crash BEFORE the
     commit leaves the previous snapshot as latest, and the retry
     merges cleanly. Old `batch=` snapshots are superseded bookkeeping
-    — prune them with sources.tables.compact_catalog(preserve=False)
-    or a retention sweep; readers always take max(batch).
+    — prune them with a retention sweep, never compact_catalog;
+    readers always take the newest (sources.tables.latest_batch).
 
     Returns (foreachBatch callable, read_history callable)."""
     from ..operators.scd import scd2_merge
@@ -858,14 +847,7 @@ def stream_scd2(
     def read_history(spark):
         """Latest committed history snapshot, or None before the
         first batch."""
-        from ..sources.tables import read_catalog
-        df = read_catalog(spark, history_dir)
-        if df is None:
-            return None
-        latest = df.agg(F.max("batch").alias("m")).first()["m"]
-        if latest is None:
-            return None
-        return df.filter(F.col("batch") == latest).drop("batch")
+        return latest_batch(spark, history_dir)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
@@ -891,13 +873,35 @@ def stream_scd2(
                    StructField("is_current", BooleanType())]))
         merged = scd2_merge(hist, latest, key_cols, attr_cols,
                             ts_col=ts_col)
-        (merged.localCheckpoint(eager=True)
-         .withColumn("batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(history_dir))
+        land_batch(merged.localCheckpoint(eager=True), history_dir,
+                   batch_id)
 
     return _batch, read_history
+
+
+def _snapshot_sink(state_dir: str, build, merge,
+                   idempotent: bool = False):
+    """foreachBatch wiring shared by the snapshot-store sinks: per
+    micro-batch, `build` the batch's increment, `merge(prev, inc)` it
+    into the newest committed snapshot and land the full merged state
+    under `state_dir/batch=<id>`. An additive state reads only batches
+    STRICTLY EARLIER than the current id, so an at-least-once replay
+    regenerates the byte-identical snapshot instead of double-counting;
+    an `idempotent` merge reads the newest snapshot unconditionally.
+
+    Returns (foreachBatch callable, read_state callable)."""
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        inc = build(batch_df)
+        prev = latest_batch(batch_df.sparkSession, state_dir,
+                            None if idempotent else batch_id)
+        merged = inc if prev is None else merge(prev, inc)
+        land_batch(merged.localCheckpoint(eager=True), state_dir,
+                   batch_id)
+
+    if idempotent:
+        return _batch, lambda spark: latest_batch(spark, state_dir)
+    return _batch, (lambda spark, before_batch=None:
+                    latest_batch(spark, state_dir, before_batch))
 
 
 def stream_rollup(
@@ -926,41 +930,17 @@ def stream_rollup(
 
     The state stays ≤ buckets·dims cells, so landing the full snapshot
     per batch is a few KB/MB regardless of stream volume; prune
-    superseded `batch=` partitions with compact_catalog or a retention
-    sweep.
+    superseded `batch=` partitions with a retention sweep, never
+    compact_catalog.
 
     Returns (foreachBatch callable, read_state callable)."""
     from ..operators.rollup import rollup_build, rollup_merge
 
     dims = list(dims or [])
-
-    def read_state(spark, before_batch: "int | None" = None):
-        """Latest committed state (optionally: committed strictly
-        before `before_batch`), or None before the first batch."""
-        from ..sources.tables import read_catalog
-        df = read_catalog(spark, state_dir)
-        if df is None:
-            return None
-        if before_batch is not None:
-            df = df.filter(F.col("batch") < int(before_batch))
-        latest = df.agg(F.max("batch").alias("m")).first()["m"]
-        if latest is None:
-            return None
-        return df.filter(F.col("batch") == latest).drop("batch")
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        inc = rollup_build(batch_df, ts_col, grain, dims, value_col)
-        prev = read_state(spark, before_batch=int(batch_id))
-        merged = inc if prev is None else rollup_merge(prev, inc,
-                                                       dims=dims)
-        (merged.localCheckpoint(eager=True)
-         .withColumn("batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(state_dir))
-
-    return _batch, read_state
+    return _snapshot_sink(
+        state_dir,
+        lambda df: rollup_build(df, ts_col, grain, dims, value_col),
+        lambda prev, inc: rollup_merge(prev, inc, dims=dims))
 
 
 def stream_hll(
@@ -984,29 +964,9 @@ def stream_hll(
     from ..operators.sketch import hll_merge, hll_partials
 
     gb = list(group_by or [])
-
-    def read_state(spark):
-        from ..sources.tables import read_catalog
-        df = read_catalog(spark, state_dir)
-        if df is None:
-            return None
-        latest = df.agg(F.max("batch").alias("m")).first()["m"]
-        if latest is None:
-            return None
-        return df.filter(F.col("batch") == latest).drop("batch")
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        inc = hll_partials(batch_df, col, gb, b, seed)
-        prev = read_state(spark)
-        merged = inc if prev is None else hll_merge(prev, inc)
-        (merged.localCheckpoint(eager=True)
-         .withColumn("batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(state_dir))
-
-    return _batch, read_state
+    return _snapshot_sink(
+        state_dir, lambda df: hll_partials(df, col, gb, b, seed),
+        hll_merge, idempotent=True)
 
 
 def stream_cms(
@@ -1033,31 +993,10 @@ def stream_cms(
     from ..operators.sketch import cms_build, cms_merge
 
     gb = list(group_by or [])
-
-    def read_state(spark, before_batch: "int | None" = None):
-        from ..sources.tables import read_catalog
-        df = read_catalog(spark, state_dir)
-        if df is None:
-            return None
-        if before_batch is not None:
-            df = df.filter(F.col("batch") < int(before_batch))
-        latest = df.agg(F.max("batch").alias("m")).first()["m"]
-        if latest is None:
-            return None
-        return df.filter(F.col("batch") == latest).drop("batch")
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        inc = cms_build(batch_df, col, gb, d, w, seed)
-        prev = read_state(spark, before_batch=int(batch_id))
-        merged = inc if prev is None else cms_merge(prev, inc)
-        (merged.localCheckpoint(eager=True)
-         .withColumn("batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(state_dir))
-
-    return _batch, read_state
+    return _snapshot_sink(
+        state_dir,
+        lambda df: cms_build(df, col, gb, d, w, seed),
+        cms_merge)
 
 
 def stream_histogram(
@@ -1078,31 +1017,10 @@ def stream_histogram(
     from ..operators.histogram import histogram_build, histogram_merge
 
     gb = list(group_by or [])
-
-    def read_state(spark, before_batch: "int | None" = None):
-        from ..sources.tables import read_catalog
-        df = read_catalog(spark, state_dir)
-        if df is None:
-            return None
-        if before_batch is not None:
-            df = df.filter(F.col("batch") < int(before_batch))
-        latest = df.agg(F.max("batch").alias("m")).first()["m"]
-        if latest is None:
-            return None
-        return df.filter(F.col("batch") == latest).drop("batch")
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        inc = histogram_build(batch_df, value_col, lo, hi, n_bins, gb)
-        prev = read_state(spark, before_batch=int(batch_id))
-        merged = inc if prev is None else histogram_merge(prev, inc)
-        (merged.localCheckpoint(eager=True)
-         .withColumn("batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(state_dir))
-
-    return _batch, read_state
+    return _snapshot_sink(
+        state_dir,
+        lambda df: histogram_build(df, value_col, lo, hi, n_bins, gb),
+        histogram_merge)
 
 
 def stream_km(
@@ -1126,31 +1044,10 @@ def stream_km(
     from ..operators.survival import km_counts, km_merge
 
     gb = list(group_by or [])
-
-    def read_state(spark, before_batch: "int | None" = None):
-        from ..sources.tables import read_catalog
-        df = read_catalog(spark, state_dir)
-        if df is None:
-            return None
-        if before_batch is not None:
-            df = df.filter(F.col("batch") < int(before_batch))
-        latest = df.agg(F.max("batch").alias("m")).first()["m"]
-        if latest is None:
-            return None
-        return df.filter(F.col("batch") == latest).drop("batch")
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        inc = km_counts(batch_df, duration_col, event_col, gb)
-        prev = read_state(spark, before_batch=int(batch_id))
-        merged = inc if prev is None else km_merge(prev, inc, gb)
-        (merged.localCheckpoint(eager=True)
-         .withColumn("batch", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch").parquet(state_dir))
-
-    return _batch, read_state
+    return _snapshot_sink(
+        state_dir,
+        lambda df: km_counts(df, duration_col, event_col, gb),
+        lambda prev, inc: km_merge(prev, inc, gb))
 
 
 def stream_touch_conversion_pairs(
@@ -1272,14 +1169,21 @@ def stream_quality_monitor(
 
     Returns the started StreamingQuery; callers drain with
     awaitTermination (availableNow default)."""
-    from pyspark.sql import functions as F
-
     from ..operators.expectations import check_expectations
 
+    return _start_report_sink(
+        stream, lambda df: check_expectations(df, rules), output_dir,
+        checkpoint_dir, trigger_available_now)
+
+
+def _start_report_sink(stream, report, output_dir: str,
+                       checkpoint_dir: "str | None",
+                       trigger_available_now: bool):
+    """Start a foreachBatch query that appends `report(batch_df)` with
+    its `batch_id` to `output_dir` parquet — the monitors' audit log."""
     def _each(batch_df, batch_id: int):
-        rep = (check_expectations(batch_df, rules)
-               .withColumn("batch_id", F.lit(int(batch_id))))
-        (rep.coalesce(1).write.mode("append").parquet(output_dir))
+        (report(batch_df).withColumn("batch_id", F.lit(int(batch_id)))
+         .coalesce(1).write.mode("append").parquet(output_dir))
 
     w = stream.writeStream.foreachBatch(_each)
     if checkpoint_dir:
@@ -1287,8 +1191,6 @@ def stream_quality_monitor(
     if trigger_available_now:
         w = w.trigger(availableNow=True)
     return w.start()
-
-
 
 
 def stream_drift_monitor(
@@ -1318,20 +1220,10 @@ def stream_drift_monitor(
     on the stream. Append is at-least-once on failure replay (the
     shared foreachBatch posture); the recorded batch_id lets readers
     drop replay duplicates deterministically."""
-    from pyspark.sql import functions as F
-
     from ..operators.drift import distribution_drift
 
-    def _each(batch_df, batch_id: int):
-        rep = (distribution_drift(
-            ref, batch_df, value_col, group_cols=group_cols,
-            lo=lo, hi=hi, bins=bins)
-            .withColumn("batch_id", F.lit(int(batch_id))))
-        (rep.coalesce(1).write.mode("append").parquet(output_dir))
-
-    w = stream.writeStream.foreachBatch(_each)
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_report_sink(
+        stream, lambda df: distribution_drift(
+            ref, df, value_col, group_cols=group_cols,
+            lo=lo, hi=hi, bins=bins),
+        output_dir, checkpoint_dir, trigger_available_now)

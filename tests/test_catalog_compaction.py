@@ -247,3 +247,34 @@ class TestBucketedFingerprintCatalog:
             self._docs(spark, [(99, "t 5"), (98, "fresh")]),
             cat).collect())
         assert got == [98]
+
+
+class TestSnapshotStore:
+    def test_compacted_snapshot_store_raises(self, spark, tmp_path):
+        """A snapshot store (each batch= partition holds the FULL
+        state) must not be compacted: the fold into batch=-1 unions
+        the snapshots. Two rollup batches put 2 then 1 events in one
+        day cell (state 3); after compaction the reader would return
+        both snapshots (2 and 3) and a third batch would land 6, not
+        4 — so the reader and the next batch raise instead."""
+        import pyspark.sql.functions as F
+
+        from nifi_extracttext_processor_spark.streaming.pipeline import (
+            stream_rollup,
+        )
+
+        def events(n):
+            return (spark.createDataFrame(
+                [("2024-01-01 05:00:00",)] * n, "ts string")
+                .withColumn("ts", F.to_timestamp("ts")))
+
+        sd = str(tmp_path / "state")
+        fb, read_state = stream_rollup(sd, "ts", "day")
+        fb(events(2), 0)
+        fb(events(1), 1)
+        assert [r["n_rows"] for r in read_state(spark).collect()] == [3]
+        compact_catalog(spark, sd)
+        with pytest.raises(ValueError, match="compacted"):
+            read_state(spark)
+        with pytest.raises(ValueError, match="compacted"):
+            fb(events(1), 2)
